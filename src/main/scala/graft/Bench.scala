@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throughput benchmark (driver contract): one JSON line with per-query
   * wall time over the headline set at SPARK_GRAFT_SF_DIR.
   *
@@ -85,40 +83,21 @@ object Bench {
           s"bench: name filter '${args(0)}' contains no non-empty patterns")
         n => pats.exists(n.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = EngineConf.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      // shuffle parallelism must scale with DATA, not cores: at sf100
-      // (600M lineitem) 32 partitions means ~19M rows each and the
-      // sort/join spill path dominates (join_inner 94 s -> 45 s,
-      // agg_minmax_nunique 173 s -> 89 s at 256 partitions, same
-      // machine). Default stays = cpus for the driver's small-sf
-      // runs; scaled runs pass the env override, exactly as a
-      // cluster job would size it
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      // the driver's testdata ships one parquet file per table; 32 MiB
-      // splits keep single-file scans parallel on local[32] (a real
-      // cluster reads many files and would use the 128 MiB default)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // shuffle files are only deleted when a GC collects their
-      // ShuffleDependency; a 100g heap under scaled runs may not GC
-      // for the whole bench, so spills accumulate unboundedly — the
-      // round-8 sf100 disk-full event (43 GB of blockmgr files in
-      // 10 min at p256) was exactly this. The driver-side periodic GC
-      // is the ContextCleaner's own knob (default 30 min — far too
-      // lazy for one shared disk); rep() also triggers an untimed
-      // explicit GC after each sample so each rep's shuffle files are
-      // reclaimed before the next begins
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val builder = EngineConf.local(cpus)
+    // shuffle parallelism must scale with DATA, not cores: at sf100
+    // (600M lineitem) 32 partitions means ~19M rows each and the
+    // sort/join spill path dominates (join_inner 94 s -> 45 s,
+    // agg_minmax_nunique 173 s -> 89 s at 256 partitions, same
+    // machine). Default stays = cpus for the driver's small-sf
+    // runs; scaled runs pass the env override, exactly as a
+    // cluster job would size it
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(builder.config("spark.sql.shuffle.partitions", _))
+    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
+      .foreach(builder.config("spark.sql.files.maxPartitionBytes", _))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def exec(name: String): Unit =
@@ -297,7 +276,7 @@ object Bench {
       val gcSec = (gcMillis() - gc0) / 1e3
       val gb = if (rb0 < 0) -1.0 else (diskReadBytes() - rb0) / 1e9
       // untimed: release this rep's shuffle deps so the ContextCleaner
-      // can delete their files (see the periodicGC comment above)
+      // can delete their files (see the periodicGC note on EngineConf.local)
       System.gc()
       (dt, ok, la, gb, gcSec)
     }

@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** Engine-level session settings, applied at session CONSTRUCTION by
-  * every harness (Bench, Verify, the test session) — the documented
-  * front door for confs the engine's physical plans depend on, so no
-  * query builder ever mutates global session state from inside a
-  * query (round-9 verdict #4).
+/** Engine-level session settings, applied at session CONSTRUCTION —
+  * the documented front door for confs the engine's physical plans
+  * depend on, so no query builder ever mutates global session state
+  * from inside a query (round-9 verdict #4). [[configure]] is what a
+  * deployment applies; [[local]] is the one local-mode session every
+  * in-repo main and the test suite build on top of it.
   *
   * The two layout settings exist for `sources.BucketedLayout`:
   *
@@ -68,6 +70,36 @@ object EngineConf {
       b.config("spark.sql.extensions", "graft.GraftExtensions")) {
       case (bb, (k, v)) => bb.config(k, v)
     }
+
+  /** A `local[cpus]` session: [[configure]] plus the settings every
+    * local run shares. Shuffle parallelism defaults to the core count
+    * (scaled runs override it, as a cluster job would size it). The
+    * driver's testdata ships one parquet file per table, so 32 MiB
+    * splits keep single-file scans parallel (a real cluster reads many
+    * files and would use the 128 MiB default). Shuffle files are only
+    * deleted when a GC collects their ShuffleDependency, and with a big
+    * heap the ContextCleaner's default 30-min periodic GC lets spills
+    * pile up on the one local disk (the sf100 disk-full event), hence
+    * 60 s. Timestamp settings: see Tables.apply. */
+  def local(cpus: Int): SparkSession.Builder =
+    configure(SparkSession.builder().master(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.files.maxPartitionBytes", "33554432")
+      .config("spark.cleaner.periodicGC.interval", "60s")
+
+  /** Loud check used by Tables.apply and the as-of join: a session
+    * built without GraftExtensions has none of the graft_* functions
+    * or the as-of strategy, and would otherwise fail deep in analysis
+    * or planning with an unresolved-function error. */
+  def requireExtensions(s: SparkSession): Unit =
+    require(s.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dot")),
+      "graft session extensions are not installed — build the session with " +
+        "graft.EngineConf.configure(builder), or pass " +
+        "--conf spark.sql.extensions=graft.GraftExtensions")
 
   /** Loud check used by layout readers: a session missing the engine
     * settings would plan the Sort/Exchange the layout exists to

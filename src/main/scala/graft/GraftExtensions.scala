@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
 import graft.plans.AsofStrategy
 
-/** Cluster-deployment registration point: installs every graft custom
+/** The registration point: installs every graft custom
   * piece into a session at construction time via the standard
   * extensions hook, so a cluster user needs only
   *
@@ -15,13 +15,11 @@ import graft.plans.AsofStrategy
   *
   * (or `.withExtensions(new GraftExtensions)`) and gets the native
   * as-of join strategy plus all `graft_*` SQL functions in EVERY
-  * session of the application — no per-query `register` calls, and
-  * catalog-level (not temp) function registration.
-  *
-  * The in-repo query paths keep their lazy per-session `register`
-  * hooks (Tables.apply / AsofJoin.backward) so the library also works
-  * without any config; this class is the "deploy it on a real
-  * cluster" front door and is spec-pinned by GraftExtensionsSpec.
+  * session of the application. It is the ONLY registration path:
+  * every in-repo session gets it through `EngineConf.configure`, and
+  * `EngineConf.requireExtensions` fails the first table load of a
+  * session built without it. GraftExtensionsSpec pins that every
+  * `graft_*` name the library uses is installed here.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -65,5 +63,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     fn("graft_nfc", es => NfcNormalize(es.head))
     fn("graft_token_count", es => TokenCount(es.head))
     fn("graft_canon", es => CanonText(es.head))
+    fn("graft_marker_scores", es => MarkerScores(es.head))
+    fn("graft_audio_energies", es => AudioFrameEnergies(es.head))
+    fn("graft_sampled_fp", es => SampledFp(es.head))
+    fn("graft_simhash24", es => SimHash24(es.head))
   }
 }

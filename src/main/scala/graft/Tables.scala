@@ -61,10 +61,7 @@ object Tables {
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // central session hook: make the graft custom expressions available
-    // to every query (idempotent map-put, no measurable overhead)
-    graft.functions.VectorExprs.register(spark)
-    graft.functions.BloomExprs.register(spark)
+    EngineConf.requireExtensions(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val df2 =
       if (name == "events" && df.schema("ts").dataType == LongType)

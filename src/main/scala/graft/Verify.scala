@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,22 +17,13 @@ object Verify {
         n => (pos.isEmpty || pos.exists(n.contains)) && !negPats.exists(n.contains)
       }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      // scaled differentials size shuffle parallelism with the DATA
-      // (e.g. 256 at sf100), same knob as Bench — SCALE.md round-7
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // reclaim finished queries' shuffle files promptly: with a big
-      // heap the default 30-min ContextCleaner GC lets scaled-run
-      // spills pile up on the one shared disk (see Bench.scala)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+    val builder = EngineConf.local(cpus)
+    // scaled differentials size shuffle parallelism with the DATA
+    // (e.g. 256 at sf100), same knob as Bench — SCALE.md round-7
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(builder.config("spark.sql.shuffle.partitions", _))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // failures are also persisted to failed.json: a thrown query writes

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -35,20 +34,6 @@ import PortableHash._
   * semantics on all of Unicode, not just ASCII.
   */
 object MinHashExprs {
-
-  /** register SQL functions so queries can use expr("...") without
-    * depending on version-specific Column construction APIs */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_poly_hash",
-      exprs => PolyHash(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingle_hash64",
-      exprs => ShingleHash64s(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash_bands",
-      exprs => MinHashBandKeys(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_simhash24",
-      exprs => SimHash24(exprs.head), "scala_udf")
-  }
 
   private[functions] def polyHash(s: UTF8String): Long = {
     val str = s.toString

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** String-accessor expressions Spark lacks natively.
+/* String-accessor expressions Spark lacks natively.
   *
   * pandas `Series.str.normalize` (core/strings/accessor.py:3236 →
   * unicodedata.normalize) has no Spark SQL builtin; this is the
@@ -14,31 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Catalyst expression, so it stays inside whole-stage codegen rather
   * than dropping to a UDF. DuckDB's nfc_normalize is the oracle peer.
   */
-object StringExprs {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_token_count",
-      exprs => TokenCount(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_canon",
-      exprs => CanonText(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_marker_scores",
-      exprs => MarkerScores(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_audio_energies",
-      exprs => AudioFrameEnergies(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_sampled_fp",
-      exprs => SampledFp(exprs.head), "scala_udf")
-  }
-}
 
 /** Single-pass stride-16 sample-fingerprint kernel shared by
   * interpreted eval and the generated code of [[SampledFp]].
   */
 object FrameSampleScan {
   final val Stride = 16
-  final val P = 1000000007L // PortableHash.P, inlined for codegen
 
   /** fp == aggregate(transform(sequence(1, length(text), 16),
     * i -> ascii(substr(text, i, 1)).cast(long)), 0L,
@@ -46,19 +26,20 @@ object FrameSampleScan {
     * hash of every 16th CHARACTER (code point, like
     * UTF8String.numChars; ascii() yields the code point — pinned
     * against the HOF on multi-byte docs by FrameSampleKernelSpec).
-    * acc < P < 2^30 so acc*31 + cp stays far inside int64, exactly as
+    * P = PortableHash.P < 2^30, so acc*31 + cp stays far inside int64 as
     * in the HOF fold. Empty text folds over an empty sequence -> 0,
     * same as here. The HOF form materialized a sampled-char array per
     * row and ran the fold interpreted (HigherOrderFunction has no
     * codegen); this is one code-point decode of the document inside
     * whole-stage codegen. */
   def sampledFp(s: UTF8String): Long = {
-    val cps = s.toString.codePoints().toArray
+    val cps = s.toString.codePoints().iterator()
     var acc = 0L
     var i = 0
-    while (i < cps.length) {
-      acc = (acc * 31 + cps(i)) % P
-      i += Stride
+    while (cps.hasNext) {
+      val cp = cps.nextInt()
+      if (i % Stride == 0) acc = (acc * 31 + cp) % PortableHash.P
+      i += 1
     }
     acc
   }

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Codegen'd vector kernels for the similarity family.
+/* Codegen'd vector kernels for the similarity family.
   *
   * The higher-order-function dot product
   * (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`) is semantically right
@@ -24,38 +23,6 @@ import org.apache.spark.sql.types._
   * `frame.py:1458`; the Spark-native equivalent of "drop to the fast
   * kernel" is a custom Expression inside whole-stage codegen.)
   */
-object VectorExprs {
-
-  /** idempotent session registration: `graft_dot(a, b)`,
-    * `graft_l2sq(a, b)` */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_l2sq",
-      exprs => L2Sq(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_lsh_bucket",
-      exprs => LshBucket(exprs.head,
-        intArg(exprs, 1, "graft_lsh_bucket"),
-        intArg(exprs, 2, "graft_lsh_bucket")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_rand_project",
-      exprs => RandProject(exprs.head,
-        intArg(exprs, 1, "graft_rand_project")), "scala_udf")
-  }
-
-  /** foldable-int argument guard, mirroring GraftExtensions.intArg:
-    * scalar config args are plan-time parameters and must fail loudly
-    * when non-literal (ADVICE r7). */
-  private def intArg(es: Seq[Expression], i: Int, name: String): Int = {
-    require(i < es.length && es(i).foldable,
-      s"$name: argument ${i + 1} must be a literal integer")
-    es(i).eval() match {
-      case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$name: argument ${i + 1} must be a literal integer, got $other")
-    }
-  }
-}
 
 /** Johnson–Lindenstrauss sign projection of a float-array embedding to
   * `outDim` doubles in ONE pass over the vector: out[j] = Σ_i emb[i] ·

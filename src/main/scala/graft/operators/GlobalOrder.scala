@@ -70,8 +70,7 @@ object GlobalOrder {
     * keep today's bucket count unchanged at every scale; bucket
     * layout never affects the computed values (bounds only balance
     * buckets — GlobalOrderSpec pins the ordinals). */
-  private val OneBucketRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_ORDINAL_ONE_BUCKET_ROWS", "16384").toLong
+  private final val OneBucketRows = 16384L
 
   /** df + `ordinalCol` (0-based long) following `sortCols` order. */
   def zipOrdinal(df: DataFrame, sortCols: Seq[Column], ordinalCol: String = "__ord"): DataFrame = {

@@ -96,7 +96,6 @@ object MultimodalQueries extends QueryModule {
     // posexplode reproduces the per-frame rows in the same order.
     "mm_audio_frames" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       val frameLen = 32; val hop = 16
       Tables(s, d, "documents")
         .filter(length($"text") >= frameLen)
@@ -119,7 +118,6 @@ object MultimodalQueries extends QueryModule {
     // HOF on the corpus and multi-byte edge docs).
     "mm_frame_sample" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       Tables(s, d, "documents")
         .select($"doc_id",
           expr("graft_sampled_fp(text)").as("sampled_fp"),

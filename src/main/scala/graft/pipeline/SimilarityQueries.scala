@@ -27,8 +27,8 @@ object SimilarityQueries extends QueryModule {
     * codegen'd DotProduct expression (functions/VectorExprs.scala):
     * bit-identical to the HOF `aggregate(zip_with(...))` form (same
     * widening, product rounding, and summation order) but a fused
-    * generated-Java loop with no intermediate array. Registered on
-    * the session by Tables(). */
+    * generated-Java loop with no intermediate array. Installed by
+    * GraftExtensions. */
   private def dot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
 

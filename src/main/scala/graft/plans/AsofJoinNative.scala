@@ -395,9 +395,7 @@ object AsofJoinNative {
       allowExactMatches: Boolean = true): DataFrame = {
     require(Set("backward", "forward", "nearest")(direction),
       s"as-of join: unknown direction '$direction'")
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsofStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsofStrategy
+    graft.EngineConf.requireExtensions(spark)
 
     val lPlan = GraftSqlBridge.analyzed(left)
     val rAnalyzed = GraftSqlBridge.analyzed(right)

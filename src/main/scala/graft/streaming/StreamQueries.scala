@@ -69,27 +69,20 @@ object StreamQueries extends QueryModule {
     * partitions of open/commit dwarfed the actual join). So the
     * partition count follows STREAMED INPUT BYTES (guide §2.2 —
     * partitions sized by data, never by the local core count):
-    * ceil(bytes / target), target 32 MB per partition
-    * (`SPARK_GRAFT_STREAM_STATE_TARGET_MB` overrides), floor 1, no
-    * upper clamp — at sf0.1 that is 1 store per operator per batch; a
-    * 100 TB/day stream gets ~3M-row-sized thousands, exactly the
-    * production sizing rule. `SPARK_GRAFT_STREAM_STATE_PARTITIONS`
-    * pins an explicit count (scaled StreamBench runs).
+    * ceil(bytes / 32 MB), floor 1, no upper clamp — at sf0.1 that is
+    * 1 store per operator per batch; a 100 TB/day stream gets
+    * ~3M-row-sized thousands, exactly the production sizing rule.
+    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` pins an explicit count
+    * (scaled StreamBench runs).
     * Values are unaffected: state is hash-partitioned by key and the
     * partition count only changes WHERE a key's store lives. */
-  @volatile var statePartitionsDefault: Option[Int] = None // in-JVM probe/bench hook; env wins
   private def statePartitions: Option[Int] =
     sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.trim.toInt)
-      .orElse(statePartitionsDefault)
       .orElse {
         val bytes = lastInputBytes
+        val target = 32L << 20
         if (bytes <= 0L) None
-        else {
-          val targetMb = sys.env.get("SPARK_GRAFT_STREAM_STATE_TARGET_MB")
-            .map(_.trim.toLong).getOrElse(32L)
-          val target = math.max(1L, targetMb) << 20
-          Some(math.min((bytes + target - 1) / target, Int.MaxValue.toLong).toInt)
-        }
+        else Some(math.min((bytes + target - 1) / target, Int.MaxValue.toLong).toInt)
       }
 
   /** SPARK_GRAFT_STREAM_MAX_FILES splits the drive into real
@@ -366,7 +359,6 @@ object StreamQueries extends QueryModule {
         .filter($"value" > 250.0).select($"user_id").distinct()
       val bytes = graft.functions.BloomExprs.buildBytes(
         denied, "user_id", denied.count())
-      graft.functions.BloomExprs.register(s)
       val ev = eventsStream(s, d)
       val probe = call_function("graft_bloom_contains",
         lit(bytes), $"user_id")

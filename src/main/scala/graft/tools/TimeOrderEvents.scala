@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Writes a TIME-ORDERED copy of the events table for the streaming
@@ -36,14 +35,7 @@ object TimeOrderEvents {
     val src = args(0)
     val dst = args(1)
     val nFiles = if (args.length > 2) args(2).toInt else 96
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineConf.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val outDir = s"$dst/events.parquet"

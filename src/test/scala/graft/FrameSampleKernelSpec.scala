@@ -37,7 +37,6 @@ class FrameSampleKernelSpec extends SparkSpec {
     val corpus = Tables(spark, sf(), "documents").select($"doc_id", $"text")
     for (d <- Seq(edge, corpus)) {
       val hof = hofRows(d)
-      graft.functions.StringExprs.register(spark)
       // the query builder's exact kernel shape, on this in-memory frame
       val ker = d.select($"doc_id",
         expr("graft_sampled_fp(text)").as("sampled_fp"),
@@ -53,7 +52,6 @@ class FrameSampleKernelSpec extends SparkSpec {
     // empty list and fp 0; the kernel matches the oracle. No declared
     // fixture carries empty text, so declared results are unchanged.
     import spark.implicits._
-    graft.functions.StringExprs.register(spark)
     val row = Seq((0L, "")).toDF("doc_id", "text")
       .select(expr("graft_sampled_fp(text)").as("fp")).head()
     assert(row.getLong(0) == 0L)

@@ -29,7 +29,6 @@ class LshHotBandSpec extends SparkSpec {
   /** the pre-collapse algorithm, verbatim: band join over ALL docs */
   private def plainPairs(d: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.functions.MinHashExprs.register(spark)
     val sig = d
       .select($"doc_id", expr("graft_shingle_hash64(text)").as("sh"))
       .select($"doc_id", $"sh", expr("graft_minhash_bands(sh)").as("bands"))

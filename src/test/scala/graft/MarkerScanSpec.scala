@@ -39,7 +39,6 @@ class MarkerScanSpec extends SparkSpec {
   }
 
   test("kernel matches the HOF chain on every corpus document") {
-    graft.functions.StringExprs.register(spark)
     def hofCount(ws: Seq[String]): Column =
       aggregate(split(col("text"), " "), lit(0L),
         (acc, w) => acc + when(w.isin(ws.map(lit): _*), 1L).otherwise(0L))

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs: one JVM-wide SparkSession, UTC, small
-  * shuffle parallelism, nanos-tolerant parquet reads (TESTDATA.md).
+/** Shared session for specs: one JVM-wide `EngineConf.local(4)`
+  * session — UTC, small shuffle parallelism, nanos-tolerant parquet
+  * reads (TESTDATA.md), GraftExtensions installed.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,15 +14,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = EngineConf.configure(SparkSession.builder()
-      .master("local[4]"))
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = EngineConf.local(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
