@@ -58,7 +58,7 @@ object Bench {
     "rs_pivot",            // groupBy().pivot()
     "set_dropdup_first",   // dedup keep=first window
     "ts_resample_day",     // time bucketing
-    "join_asof_backward",  // union+window as-of join
+    "join_asof_backward",  // keyed as-of join (native merge-walk)
     "join_asof_native",    // native merge-walk as-of operator
     "dedup_minhash_pairs", // shingle->minhash->LSH->verify
     "sim_cosine_topk",     // brute-force ANN baseline

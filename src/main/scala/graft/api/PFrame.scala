@@ -266,7 +266,12 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
 
   def groupby(keys: String*): PGroupBy = PGroupBy(df, keys)
 
-  /** pd.merge_asof(direction=backward|forward|nearest) */
+  /** pd.merge_asof(direction=backward|forward|nearest) through the
+    * native merge-walk ([[graft.plans.AsofJoinNative.join]]); an empty
+    * `by` takes its range-bucketed keyless path. `on` must be
+    * timestamp, timestamp_ntz or bigint (epoch micros) on both sides;
+    * a null `by` key or `on` value raises, as in pandas. The session
+    * needs `GraftExtensions` (every `EngineConf` session has them). */
   def mergeAsof(
       right: PFrame,
       by: Seq[String],
@@ -274,29 +279,9 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
       valueCols: Seq[String],
       direction: String = "backward",
       toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): PFrame = {
-    val out = direction match {
-      case "backward" if by.isEmpty =>
-        // keyless as-of: the keyed rewrite would collapse to one
-        // window partition — route to the range-partitioned merge-walk
-        graft.operators.AsofJoin.globalBackward(df, right.df, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "backward" =>
-        graft.operators.AsofJoin.backward(df, right.df, by, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "forward" if by.isEmpty =>
-        graft.operators.AsofJoin.globalForward(df, right.df, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "forward" =>
-        graft.operators.AsofJoin.forward(df, right.df, by, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "nearest" =>
-        graft.operators.AsofJoin.nearest(df, right.df, by, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case other => throw new IllegalArgumentException(s"direction: $other")
-    }
-    copy(df = out)
-  }
+      allowExactMatches: Boolean = true): PFrame =
+    copy(df = graft.plans.AsofJoinNative.join(df.sparkSession, df, right.df,
+      by, on, on, valueCols, direction, toleranceMicros, allowExactMatches))
 
   /** df.ewm(alpha).mean()/var() per key over an explicit time order.
     * span/com/halflife parameterizations: pass

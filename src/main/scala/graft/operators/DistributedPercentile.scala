@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact interpolated percentiles by DISTRIBUTED two-pass bracket
@@ -54,100 +53,47 @@ object DistributedPercentile {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Exact per-GROUP interpolated percentiles — the grouped sibling of
-    * [[exact]] (round-15, VERDICT r14 next-#2). Replaces
-    * `groupBy(keys).agg(percentile(col, p))`, whose final merge
-    * concentrates a value→count map of every distinct value PER GROUP
-    * on one reducer. Rank-from-histogram, fully distributed:
+  /** Exact per-GROUP interpolated percentiles of one or more columns —
+    * the grouped sibling of [[exact]] (round-15, VERDICT r14 next-#2).
+    * Replaces `groupBy(keys).agg(percentile(col, p))`, whose final
+    * merge concentrates a value→count map of every distinct value PER
+    * GROUP on one reducer.
     *
-    *   1. ONE partial-aggregating scan builds the per-(group, value)
-    *      count histogram — ties collapse map-side, so the shuffle
-    *      carries distinct values, never rows (cached: the prefix-sum
-    *      bounds probe and the final plan both read it);
+    * Input is the unpivoted frame (keys, tagCol, valCol): several
+    * columns over the same input are stacked map-side with `stack`
+    * (agg_median_quantile: l_quantity AND l_discount share one scan);
+    * a single column takes a literal tag. `tagCol` is appended to the
+    * group keys, so every per-(group, column) rank is computed on its
+    * own. Rank-from-histogram, fully distributed:
+    *
+    *   1. ONE partial-aggregating scan builds the per-(group, column,
+    *      value) count histogram — ties collapse map-side, so the
+    *      shuffle carries distinct values, never rows (cached: the
+    *      prefix-sum bounds probe and the final plan both read it);
     *   2. [[GlobalOrder.prefixSum]] attaches the exclusive running
-    *      count of smaller values within each group — bucketed range
-    *      partitioning + a PARTITIONED window, so no task ever holds a
-    *      group's whole distinct-value set (the failure mode of both
-    *      Spark's `percentile` merge and a naive per-group window);
-    *   3. one conditional-max aggregate selects, per group and target,
-    *      the values whose rank interval [below, below+cnt) covers the
-    *      order statistics floor(p·(n−1)) and that +1.
+    *      count of smaller values within each (group, column) —
+    *      bucketed range partitioning + a PARTITIONED window, so no
+    *      task ever holds a group's whole distinct-value set (the
+    *      failure mode of both Spark's `percentile` merge and a naive
+    *      per-group window). Bucket BOUNDS span every column's values,
+    *      but bounds only balance buckets and never affect values;
+    *   3. per column, one conditional-max aggregate selects, per group
+    *      and target, the values whose rank interval [below, below+cnt)
+    *      covers the order statistics floor(p·(n−1)) and that +1.
     *
     * Interpolation is the same (1−f)·lo + f·hi convex combination with
     * the equal-brackets short-circuit as [[exact]] (bit-parity with
-    * Spark's Percentile pinned by PFrame.quantile / the DuckDB
-    * oracle); unlike the sketch-bracket global form there is no
+    * Spark's Percentile, pinned by DistributedPercentileSpec and the
+    * DuckDB oracle); unlike the sketch-bracket global form there is no
     * coverage window to miss — the full histogram always covers, so
     * the raise_error below is a pure can't-happen invariant net.
     *
     * Contract notes: nulls and NaNs are ignored (as [[exact]]); a
-    * group whose every value is null/NaN is ABSENT from the output
-    * (callers needing such groups must outer-join them back). Output
-    * columns: keys ++ outNames, one row per surviving group.
+    * group where some column is all null/NaN is ABSENT from the output
+    * (per-column results inner-join on `keys`; callers needing such
+    * groups must outer-join them back). Output columns: keys ++ every
+    * spec's outNames, one row per surviving group.
     */
-  def exactGrouped(df: DataFrame, keys: Seq[String], colName: String,
-                   ps: Seq[Double], outNames: Seq[String]): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"percentiles out of [0,1]: $ps")
-    require(outNames.size == ps.size, "one output name per percentile")
-    val kcols = keys.map(col)
-    val v = df.select(kcols :+ col(colName).cast("double").as("__v"): _*)
-      .filter(col("__v").isNotNull && !isnan(col("__v")))
-
-    // 1. per-(group, value) histogram — the only scan of the input
-    val hist = v.groupBy(kcols :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"))
-      .cache()
-    // 2. exclusive prefix count of smaller values within the group
-    val ranked = GlobalOrder.prefixSum(hist, keys, "__v", "__c", "__below")
-    // per-group totals ride a tiny broadcast back onto the histogram
-    val ns = hist.groupBy(kcols: _*).agg(sum(col("__c")).as("__n"))
-    val withN = ranked.join(broadcast(ns), keys)
-
-    // 3. order-statistic selection: pos = p·(n−1), k = floor(pos); the
-    // value whose absolute rank interval covers k (and k+1 when
-    // interpolating) is picked by one conditional-max aggregate
-    def pos(i: Int): Column = lit(ps(i)) * (col("__n") - 1)
-    def kOf(i: Int): Column = floor(pos(i))
-    val selAggs = ps.indices.flatMap { i =>
-      val lo = col("__below")
-      val hi = col("__below") + col("__c")
-      Seq(
-        max(when(lo <= kOf(i) && kOf(i) < hi, col("__v"))).as(s"__lo$i"),
-        max(when(lo <= kOf(i) + 1 && kOf(i) + 1 < hi, col("__v"))).as(s"__hi$i"))
-    }
-    val selected = withN.groupBy(kcols: _*)
-      .agg(selAggs.head, (selAggs.tail :+ max(col("__n")).as("__n")): _*)
-
-    val outCols = ps.indices.map { i =>
-      val frac = pos(i) - kOf(i)
-      val lo = col(s"__lo$i"); val hi = col(s"__hi$i")
-      when(lo.isNull || (frac > 0.0 && hi.isNull), raise_error(lit(
-        s"DistributedPercentile.exactGrouped: rank not covered for " +
-        s"p=${ps(i)} — histogram/prefix-sum invariant violated")))
-        .when(frac === 0.0 || hi <=> lo, lo)
-        .otherwise(lo * (lit(1.0) - frac) + hi * frac)
-        .as(outNames(i))
-    }
-    selected.select(kcols ++ outCols: _*)
-  }
-
-  /** Multi-column sibling of [[exactGrouped]] (round-15, guide §1.2):
-    * callers that want exact percentiles of SEVERAL columns over the
-    * same input (agg_median_quantile: l_quantity AND l_discount) used
-    * to run one full pipeline per column — one corpus scan, one
-    * histogram shuffle, and one prefix-sum probe EACH. `stacked` is
-    * the unpivoted frame (keys, tagCol, valCol — built map-side with
-    * `stack`, no extra shuffle); the histogram, the bounds probe, and
-    * the prefix sum then run ONCE over the union, with `tagCol`
-    * appended to the group keys so every per-(group, column) rank is
-    * computed exactly as the single-column form computes it (bucket
-    * BOUNDS differ — they span both columns' values — but bounds only
-    * balance buckets and never affect values). Per-column selection
-    * aggregates read the shared cached histogram; results join back
-    * on `keys`, one row per group. Groups where a column is all
-    * null/NaN drop that column's row and, through the inner join, the
-    * group — identical to joining two exactGrouped outputs. */
   def exactGroupedStacked(stacked: DataFrame, keys: Seq[String],
                           tagCol: String, valCol: String,
                           specs: Seq[(String, Seq[Double], Seq[String])]): DataFrame = {
@@ -160,17 +106,20 @@ object DistributedPercentile {
       .select(gk :+ col(valCol).cast("double").as("__v"): _*)
       .filter(col("__v").isNotNull && !isnan(col("__v")))
 
-    // 1. ONE per-(group, column, value) histogram for every column
+    // 1. per-(group, column, value) histogram — the only scan of the input
     val hist = v.groupBy(gk :+ col("__v"): _*)
       .agg(count(lit(1)).as("__c"))
       .cache()
-    // 2. ONE prefix-sum pass, ranks partitioned per (group, column)
+    // 2. ONE prefix-sum pass, ranks partitioned per (group, column);
+    // per-(group, column) totals ride a tiny broadcast back
     val ranked = GlobalOrder.prefixSum(hist, keys :+ tagCol, "__v", "__c", "__below")
     val ns = hist.groupBy(gk: _*).agg(sum(col("__c")).as("__n"))
     val withN = ranked.join(broadcast(ns), keys :+ tagCol)
 
-    // 3. per-column selection over the shared ranked frame — exactly
-    // [[exactGrouped]]'s conditional-max aggregate and interpolation
+    // 3. per-column order-statistic selection over the shared ranked
+    // frame: pos = p·(n−1), k = floor(pos); the value whose absolute
+    // rank interval covers k (and k+1 when interpolating) is picked by
+    // one conditional-max aggregate
     val perCol = specs.map { case (tag, ps, outNames) =>
       def pos(i: Int): Column = lit(ps(i)) * (col("__n") - 1)
       def kOf(i: Int): Column = floor(pos(i))

@@ -63,7 +63,7 @@ object GlobalOrder {
     * below which the whole input collapses to ONE bucket. The bounds
     * probe now returns the row count in the same action, so a tiny
     * input (e.g. a 150-row group histogram from
-    * DistributedPercentile.exactGrouped) no longer fans every stage
+    * DistributedPercentile.exactGroupedStacked) no longer fans every stage
     * of the ordinal machinery into `spark.sql.shuffle.partitions`
     * near-empty tasks — at a cluster's thousands of partitions that
     * is thousands of no-op tasks per query. Inputs above the target

@@ -129,8 +129,8 @@ object AggQueries extends QueryModule {
       import graft.operators.DistributedPercentile.exactGroupedStacked
       // round-15 follow-up: both columns share ONE scan, ONE histogram
       // shuffle and ONE prefix-sum pass via the stacked (unpivoted)
-      // variant — the earlier form ran a full exactGrouped pipeline
-      // per column. Values identical (ranks stay partitioned per
+      // input — the earlier form ran a full grouped pipeline per
+      // column. Values identical (ranks stay partitioned per
       // (group, column); selection/interpolation unchanged).
       val stacked = Tables(s, d, "lineitem").selectExpr("l_returnflag",
         "stack(2, 'q', cast(l_quantity as double), " +
@@ -788,10 +788,11 @@ object AggQueries extends QueryModule {
     // identical, oracle-pinned.
     "agg_outlier_iqr" -> { (s, d) =>
       import s.implicits._
-      val q = graft.operators.DistributedPercentile.exactGrouped(
-        Tables(s, d, "lineitem").select($"l_returnflag", $"l_extendedprice"),
-        Seq("l_returnflag"), "l_extendedprice", Seq(0.25, 0.75),
-        Seq("q1", "q3"))
+      val q = graft.operators.DistributedPercentile.exactGroupedStacked(
+        Tables(s, d, "lineitem").select($"l_returnflag", lit("p").as("cn"),
+          $"l_extendedprice"),
+        Seq("l_returnflag"), "cn", "l_extendedprice",
+        Seq(("p", Seq(0.25, 0.75), Seq("q1", "q3"))))
         .withColumn("lo", $"q1" - lit(1.5) * ($"q3" - $"q1"))
         .withColumn("hi", $"q3" + lit(1.5) * ($"q3" - $"q1"))
       Tables(s, d, "lineitem")

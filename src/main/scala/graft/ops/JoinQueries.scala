@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.{QueryModule, Tables}
 import graft.OracleNum._
-import graft.operators.AsofJoin
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -349,7 +348,7 @@ object JoinQueries extends QueryModule {
         .select($"user_id", $"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"value")
-      AsofJoin.backward(clicks, purchases,
+      graft.plans.AsofJoinNative.join(s, clicks, purchases,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"))
         .withColumnRenamed("value", "asof_val")
@@ -357,8 +356,7 @@ object JoinQueries extends QueryModule {
 
     // merge_asof with tolerance= (merge.py:644): matches older than
     // 1 day are nulled — through the native merge-walk operator
-    // (plans/AsofJoinNative); the union+window rewrite remains the
-    // cross-checked fallback (AsofJoinSpec)
+    // (plans/AsofJoinNative), like every as-of query
     "join_asof_tolerance" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -373,9 +371,9 @@ object JoinQueries extends QueryModule {
     },
 
     // merge_asof through the native LogicalPlan/Strategy/SparkPlan
-    // operator (graft.plans.AsofJoinNative): same semantics and oracle
-    // as join_asof_backward, physical sorted merge-walk instead of the
-    // union+window rewrite
+    // operator (graft.plans.AsofJoinNative). Since join_asof_backward
+    // runs the same engine, this is the same query under the name the
+    // operator's bench and oracle records use
     "join_asof_native" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -383,14 +381,15 @@ object JoinQueries extends QueryModule {
         .select($"user_id", $"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"value")
-      graft.plans.AsofJoinNative.backward(s, clicks, purchases,
+      graft.plans.AsofJoinNative.join(s, clicks, purchases,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"))
         .withColumnRenamed("value", "asof_val")
     },
 
     // merge_asof direction='forward' (merge.py:644; join.pyx:812) —
-    // native merge-walk; rewrite cross-checked in AsofJoinSpec
+    // native merge-walk, cross-checked against brute force in
+    // AsofJoinSpec
     "join_asof_forward" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -405,8 +404,8 @@ object JoinQueries extends QueryModule {
     },
 
     // merge_asof direction='nearest' (join.pyx:900): closest match in
-    // either direction, backward wins ties — native merge-walk;
-    // rewrite cross-checked in AsofJoinSpec
+    // either direction, backward wins ties — native merge-walk,
+    // cross-checked against brute force in AsofJoinSpec
     "join_asof_nearest" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -430,21 +429,19 @@ object JoinQueries extends QueryModule {
       val clicks = ev.filter($"event_type" === "click")
         .select($"user_id", $"event_id", $"ts")
       val all = ev.select($"user_id", $"ts", $"value")
-      AsofJoin.backward(clicks, all,
+      graft.plans.AsofJoinNative.join(s, clicks, all,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"), allowExactMatches = false)
         .withColumnRenamed("value", "asof_val")
     },
 
-    // merge_asof with NO by key (merge.py:644 left_by=None): since r8
-    // this runs the NATIVE merge-walk (plans/AsofJoinNative.global) —
-    // range-bucketed time as a synthetic `by` key, per-bucket boundary
-    // carry rows, the same AsofJoinExec pointer walk as the keyed
-    // queries; no single-partition window, no union blow-up
-    // (operators/AsofJoin.globalBackward keeps the DataFrame-level
-    // rewrite for the API surface). Right side is aggregated to unique
-    // timestamps so the latest-match row is well-defined in both
-    // engines.
+    // merge_asof with NO by key (merge.py:644 left_by=None): the
+    // NATIVE merge-walk's keyless path (AsofJoinNative.join, by = Nil)
+    // — range-bucketed time as a synthetic `by` key, per-bucket
+    // boundary carry rows, the same AsofJoinExec pointer walk as the
+    // keyed queries; no single-partition window, no union blow-up.
+    // Right side is aggregated to unique timestamps so the
+    // latest-match row is well-defined in both engines.
     "join_asof_global" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -452,7 +449,7 @@ object JoinQueries extends QueryModule {
         .select($"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      graft.plans.AsofJoinNative.global(s, clicks, purchases,
+      graft.plans.AsofJoinNative.join(s, clicks, purchases, by = Nil,
         leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"))
     },
 
@@ -466,7 +463,7 @@ object JoinQueries extends QueryModule {
         .select($"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      graft.plans.AsofJoinNative.global(s, clicks, purchases,
+      graft.plans.AsofJoinNative.join(s, clicks, purchases, by = Nil,
         leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
         direction = "forward")
     },
@@ -482,7 +479,7 @@ object JoinQueries extends QueryModule {
         .select($"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      graft.plans.AsofJoinNative.global(s, clicks, purchases,
+      graft.plans.AsofJoinNative.join(s, clicks, purchases, by = Nil,
         leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
         direction = "nearest")
     },

@@ -12,9 +12,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** Native as-of join operator: LogicalPlan + Strategy + SparkPlan
   * (SURVEY §4 "custom Catalyst work"; SCALE.md round-2 target #3).
   *
-  * The DataFrame-level rewrite in `operators/AsofJoin` unions both
-  * sides and runs a windowed fill — correct, but it shuffles
-  * left+right as one stream and evaluates window state. This operator
+  * The only as-of engine: every merge_asof (the `join_asof_*` queries
+  * and `PFrame.mergeAsof`) plans through [[AsofJoinNative.join]]. It
   * is the physical form of the reference's sorted pointer walk
   * (`_libs/join.pyx:725` asof_join_backward_on_X_by_Y), distributed:
   *
@@ -27,8 +26,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *     once, carrying the latest right row per key — O(n+m) per
   *     partition, no window buffers, no union blow-up.
   *
-  * Semantics (matching `operators/AsofJoin`, which the shared DuckDB
-  * oracle checks): unmatched left rows are null-padded;
+  * Semantics (pinned against a brute-force in-memory model in
+  * AsofJoinSpec/AsofPropertySpec and against DuckDB's ASOF JOIN by the
+  * query oracle): unmatched left rows are null-padded;
   *
   *   - direction=backward: latest right row with rts <= lts
   *     (rts < lts when allowExactMatches=false);
@@ -291,16 +291,16 @@ object AsofJoinNative {
     * one exchange per side, O(n+m) walk per partition, driver state
     * O(buckets) — the same footprint as broadcasting range bounds.
     */
-  def global(
+  private def global(
       spark: SparkSession,
       left: DataFrame,
       right: DataFrame,
       leftTs: String,
       rightTs: String,
       valueCols: Seq[String],
-      direction: String = "backward",
-      toleranceUs: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame = {
+      direction: String,
+      toleranceUs: Option[Long],
+      allowExactMatches: Boolean): DataFrame = {
     import org.apache.spark.sql.{Column, Row}
     // selective import: functions.left/right would shadow the params
     import org.apache.spark.sql.functions.{col, lit, max_by, min_by, struct, unix_micros, when}
@@ -363,24 +363,18 @@ object AsofJoinNative {
     val carryDf = spark.createDataFrame(
       spark.sparkContext.parallelize(carry.toSeq, 1), rightPid.schema)
 
-    join(spark, leftP, rightPid.unionByName(carryDf), Seq("__pid"),
+    keyed(spark, leftP, rightPid.unionByName(carryDf), Seq("__pid"),
       leftTs, rightTs, valueCols, direction, toleranceUs, allowExactMatches)
       .drop("__pid")
   }
 
-  def backward(
-      spark: SparkSession,
-      left: DataFrame,
-      right: DataFrame,
-      by: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String]): DataFrame =
-    join(spark, left, right, by, leftTs, rightTs, valueCols)
-
-  /** As-of join through the native operator. `left`/`right` may share
-    * lineage: the right side is re-aliased with fresh expression ids
-    * before plan construction.
+  /** pandas `merge_asof` — the one entry point. `left`/`right` may
+    * share lineage: the right side is re-aliased with fresh expression
+    * ids before plan construction. An empty `by` takes the
+    * range-bucketed keyless path ([[global]]), so no caller can plan a
+    * keyless walk on one partition. Null `by` keys or `on` timestamps
+    * raise at execution, as in pandas; `on` must be timestamp,
+    * timestamp_ntz or bigint (epoch micros) on both sides.
     */
   def join(
       spark: SparkSession,
@@ -396,7 +390,23 @@ object AsofJoinNative {
     require(Set("backward", "forward", "nearest")(direction),
       s"as-of join: unknown direction '$direction'")
     graft.EngineConf.requireExtensions(spark)
+    if (by.isEmpty) global(spark, left, right, leftTs, rightTs, valueCols,
+      direction, toleranceUs, allowExactMatches)
+    else keyed(spark, left, right, by, leftTs, rightTs, valueCols,
+      direction, toleranceUs, allowExactMatches)
+  }
 
+  private def keyed(
+      spark: SparkSession,
+      left: DataFrame,
+      right: DataFrame,
+      by: Seq[String],
+      leftTs: String,
+      rightTs: String,
+      valueCols: Seq[String],
+      direction: String,
+      toleranceUs: Option[Long],
+      allowExactMatches: Boolean): DataFrame = {
     val lPlan = GraftSqlBridge.analyzed(left)
     val rAnalyzed = GraftSqlBridge.analyzed(right)
     // fresh exprIds on the right side so self-joins stay unambiguous

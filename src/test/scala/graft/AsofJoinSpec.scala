@@ -1,11 +1,15 @@
 package graft
 
-import graft.operators.AsofJoin
+import graft.plans.AsofJoinNative
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** merge_asof semantics (reference core/reshape/merge.py:644):
-  * backward match, exact-timestamp matches allowed, tolerance nulls
-  * out stale matches, unmatched left rows survive with NULL.
+/** merge_asof semantics (reference core/reshape/merge.py:644) of the
+  * native merge-walk: backward match, exact-timestamp matches allowed,
+  * tolerance nulls out stale matches, unmatched left rows survive with
+  * NULL. Hand-valued fixtures pin the cases directly; the events and
+  * keyless fixtures are checked row by row against the brute-force
+  * [[AsofReference]].
   */
 class AsofJoinSpec extends SparkSpec {
 
@@ -23,7 +27,7 @@ class AsofJoinSpec extends SparkSpec {
       .toDF("k", "tsm", "v")
       .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
 
-    val out = AsofJoin.backward(left, right, Seq("k"), "t", "t", Seq("v"))
+    val out = AsofJoinNative.join(spark, left, right, Seq("k"), "t", "t", Seq("v"))
       .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
 
     assert(out("a").contains(1.0)) // exact-timestamp match allowed
@@ -31,8 +35,8 @@ class AsofJoinSpec extends SparkSpec {
     assert(out("c").isEmpty)       // nothing at/before 50
     assert(out("d").contains(3.0)) // by-key separation
 
-    val tol = AsofJoin.backward(left, right, Seq("k"), "t", "t", Seq("v"),
-      toleranceMicros = Some(ts(20)))
+    val tol = AsofJoinNative.join(spark, left, right, Seq("k"), "t", "t", Seq("v"),
+      toleranceUs = Some(ts(20)))
       .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
 
     assert(tol("a").contains(1.0)) // age 0 <= 20s
@@ -49,13 +53,15 @@ class AsofJoinSpec extends SparkSpec {
       .toDF("k", "tsm", "v")
       .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
 
-    val fwd = AsofJoin.forward(left, right, Seq("k"), "t", "t", Seq("v"))
+    val fwd = AsofJoinNative.join(spark, left, right, Seq("k"), "t", "t", Seq("v"),
+        direction = "forward")
       .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
     assert(fwd("a").contains(1.0)) // exact forward match
     assert(fwd("b").contains(2.0)) // next at 130
     assert(fwd("c").isEmpty)       // nothing after 300
 
-    val near = AsofJoin.nearest(left, right, Seq("k"), "t", "t", Seq("v"))
+    val near = AsofJoinNative.join(spark, left, right, Seq("k"), "t", "t", Seq("v"),
+        direction = "nearest")
       .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
     assert(near("a").contains(1.0)) // dist 0
     assert(near("b").contains(2.0)) // 10s fwd beats 20s back
@@ -64,7 +70,8 @@ class AsofJoinSpec extends SparkSpec {
     // tie: left at 115 is 15s from both 100 and 130 -> backward wins
     val tie = Seq((1L, ts(115), "t")).toDF("k", "tsm", "tag")
       .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
-    val tieOut = AsofJoin.nearest(tie, right, Seq("k"), "t", "t", Seq("v"))
+    val tieOut = AsofJoinNative.join(spark, tie, right, Seq("k"), "t", "t", Seq("v"),
+        direction = "nearest")
       .select($"v").as[Option[Double]].collect()
     assert(tieOut.head.contains(1.0))
   }
@@ -84,14 +91,15 @@ class AsofJoinSpec extends SparkSpec {
       .toDF("k", "tsm", "v", "w")
       .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
 
-    val out = AsofJoin.backward(left, right, Seq("k"), "t", "t", Seq("v", "w"))
+    val out = AsofJoinNative.join(spark, left, right, Seq("k"), "t", "t", Seq("v", "w"))
       .select($"tag", $"v", $"w")
       .as[(String, Option[Double], Option[Double])].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     assert(out("a") == (None, Some(20.0)))   // matched row 150 as-is
     assert(out("b") == (Some(3.0), None))    // matched row 250 as-is
 
-    val fwd = AsofJoin.forward(left, right, Seq("k"), "t", "t", Seq("v", "w"))
+    val fwd = AsofJoinNative.join(spark, left, right, Seq("k"), "t", "t", Seq("v", "w"),
+        direction = "forward")
       .select($"tag", $"v", $"w")
       .as[(String, Option[Double], Option[Double])].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
@@ -106,90 +114,69 @@ class AsofJoinSpec extends SparkSpec {
     val right = Seq((1L, ts(50), 1.0)).toDF("k", "tsm", "v")
       .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
     val ex = intercept[Exception] {
-      graft.plans.AsofJoinNative.backward(spark, left, right,
+      AsofJoinNative.join(spark, left, right,
         Seq("k"), "t", "t", Seq("v")).collect()
     }
     assert(ex.getMessage != null)
   }
 
-  test("native operator matches the union+window rewrite") {
+  /** sf0.001 events: clicks (left) and the two right sides the
+    * `join_asof_*` queries use — purchases, and ALL events (every click
+    * then has an exact-ts candidate: itself). */
+  private def events: (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     val ev = Tables(spark, sf(), "events")
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id", $"event_id", $"ts")
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"value")
-    val viaWindow = AsofJoin.backward(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"))
-      .select($"event_id", $"value").as[(Long, Option[Double])]
-      .collect().toMap
-    val viaNative = graft.plans.AsofJoinNative.backward(spark, clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"))
-      .select($"event_id", $"value").as[(Long, Option[Double])]
-      .collect().toMap
-    assert(viaNative.size == viaWindow.size)
-    assert(viaNative == viaWindow)
+    (ev.filter($"event_type" === "click").select($"user_id", $"event_id", $"ts"),
+     ev.filter($"event_type" === "purchase").select($"user_id", $"ts", $"value"),
+     ev.select($"user_id", $"ts", $"value"))
   }
 
-  test("native forward/nearest/tolerance/strict match the rewrite") {
+  /** native as-of of clicks to `right` == the brute-force reference on
+    * every click; returns the native result (event_id -> value) */
+  private def nativeMatchesReference(clicks: DataFrame, right: DataFrame,
+      direction: String = "backward", toleranceUs: Option[Long] = None,
+      allowExactMatches: Boolean = true): Map[Long, Option[Double]] = {
     import spark.implicits._
-    val ev = Tables(spark, sf(), "events")
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id", $"event_id", $"ts")
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"value")
-    val all = ev.select($"user_id", $"ts", $"value")
+    val got = AsofJoinNative.join(spark, clicks, right, Seq("user_id"),
+        "ts", "ts", Seq("value"), direction, toleranceUs, allowExactMatches)
+      .select($"event_id", $"value").as[(Long, Option[Double])]
+      .collect().toMap
+    val ref = new AsofReference(
+      right.select($"user_id", unix_micros($"ts"), $"value")
+        .as[(Long, Long, Option[Double])].collect().toSeq)
+    assert(ref.uniqueRight) // sf0.001 events: 1000 distinct (user_id, ts)
+    val want = clicks.select($"event_id", $"user_id", unix_micros($"ts"))
+      .as[(Long, Long, Long)].collect().map { case (id, u, t) =>
+        id -> ref(u, t, direction, toleranceUs, allowExactMatches).flatten
+      }.toMap
+    assert(got.size == want.size)
+    assert(got == want,
+      s"$direction tol=$toleranceUs exact=$allowExactMatches")
+    got
+  }
 
-    def m(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Double]] =
-      df.select($"event_id", $"value").as[(Long, Option[Double])]
-        .collect().toMap
+  test("native operator matches brute force on events") {
+    val (clicks, purchases, _) = events
+    val got = nativeMatchesReference(clicks, purchases)
+    assert(got.values.exists(_.isDefined) && got.values.exists(_.isEmpty))
+  }
 
-    // forward
-    assert(
-      m(graft.plans.AsofJoinNative.join(spark, clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"), direction = "forward")) ==
-      m(AsofJoin.forward(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"))))
+  test("native forward/nearest/tolerance/strict match brute force on events") {
+    val (clicks, purchases, all) = events
+    val hour = Some(3600000000L)
+    nativeMatchesReference(clicks, purchases, direction = "forward")
     // nearest (ties -> backward)
-    assert(
-      m(graft.plans.AsofJoinNative.join(spark, clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"), direction = "nearest")) ==
-      m(AsofJoin.nearest(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"))))
-    // backward + tolerance
-    assert(
-      m(graft.plans.AsofJoinNative.join(spark, clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        toleranceUs = Some(3600000000L))) ==
-      m(AsofJoin.backward(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        toleranceMicros = Some(3600000000L))))
-    // nearest + tolerance
-    assert(
-      m(graft.plans.AsofJoinNative.join(spark, clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"), direction = "nearest",
-        toleranceUs = Some(3600000000L))) ==
-      m(AsofJoin.nearest(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        toleranceMicros = Some(3600000000L))))
+    nativeMatchesReference(clicks, purchases, direction = "nearest")
+    nativeMatchesReference(clicks, purchases, toleranceUs = hour)
+    nativeMatchesReference(clicks, purchases, direction = "nearest",
+      toleranceUs = hour)
     // strict backward against ALL events: the exact-ts self-candidate
     // must be skipped for the current row yet stay available as the
     // backward match of later rows — the consumed-candidate subtlety
-    assert(
-      m(graft.plans.AsofJoinNative.join(spark, clicks, all,
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        allowExactMatches = false)) ==
-      m(AsofJoin.backward(clicks, all,
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        allowExactMatches = false)))
+    nativeMatchesReference(clicks, all, allowExactMatches = false)
     // strict forward
-    assert(
-      m(graft.plans.AsofJoinNative.join(spark, clicks, all,
-        Seq("user_id"), "ts", "ts", Seq("value"), direction = "forward",
-        allowExactMatches = false)) ==
-      m(AsofJoin.forward(clicks, all,
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        allowExactMatches = false)))
+    nativeMatchesReference(clicks, all, direction = "forward",
+      allowExactMatches = false)
   }
 
   test("native operator handles empty right side and exact matches") {
@@ -200,109 +187,91 @@ class AsofJoinSpec extends SparkSpec {
     val right = Seq((1L, ts(100), 7.0))
       .toDF("k", "tsm", "v")
       .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
-    val out = graft.plans.AsofJoinNative.backward(spark, left, right,
+    val out = AsofJoinNative.join(spark, left, right,
         Seq("k"), "t", "t", Seq("v"))
       .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
     assert(out("a").contains(7.0)) // exact ts match allowed
     assert(out("b").isEmpty)       // key with no right rows
   }
 
-  test("globalBackward matches the keyed rewrite on a constant key") {
+  /** One keyless fixture three ways, each as tag -> v: the native
+    * keyless path (range buckets + boundary carry), the native keyed
+    * walk over a constant key (one partition, no carry), and the
+    * brute-force reference. Timestamps are micros; the reference
+    * resolves an equal-ts right pair in fixture order, as pandas does. */
+  private def keylessThreeWays(left: Seq[(Long, String)],
+      right: Seq[(Long, Double)], direction: String,
+      toleranceUs: Option[Long] = None, allowExactMatches: Boolean = true)
+      : (Map[String, Option[Double]], Map[String, Option[Double]],
+         Map[String, Option[Double]]) = {
     import spark.implicits._
+    val l = left.toDF("tsm", "tag")
+      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
+    val r = right.toDF("tsm", "v")
+      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
+    def run(l: DataFrame, r: DataFrame, by: Seq[String]) =
+      AsofJoinNative.join(spark, l, r, by, "t", "t", Seq("v"), direction,
+          toleranceUs, allowExactMatches)
+        .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
+    val ref = new AsofReference(right.map { case (t, v) => ((), t, v) })
+    (run(l, r, Nil),
+     run(l.withColumn("k", lit(1)), r.withColumn("k", lit(1)), Seq("k")),
+     left.map { case (t, tag) =>
+       tag -> ref((), t, direction, toleranceUs, allowExactMatches) }.toMap)
+  }
+
+  test("globalBackward matches the keyed rewrite on a constant key") {
     // enough rows to span several range partitions; values chosen so
     // matches cross partition boundaries (the carry handoff path)
     val left = (1L to 500L).map(i => (i * 10, s"L$i"))
-      .toDF("tsm", "tag")
-      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
     val right = (1L to 100L).map(i => (i * 47 + 3, i.toDouble))
-      .toDF("tsm", "v")
-      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
+    assert(right.map(_._1).distinct.size == right.size)
 
-    val global = AsofJoin.globalBackward(left, right, "t", "t", Seq("v"))
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-    val keyed = AsofJoin.backward(
-        left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-        Seq("k"), "t", "t", Seq("v"))
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-
-    assert(global.size == 500 && global == keyed)
+    val (global, keyed, brute) = keylessThreeWays(left, right, "backward")
+    assert(global.size == 500 && global == keyed && global == brute)
     assert(global("L1").isEmpty) // ts=10 before first right row at 50
 
-    val tol = AsofJoin.globalBackward(left, right, "t", "t", Seq("v"),
-      toleranceMicros = Some(5L))
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-    val tolKeyed = AsofJoin.backward(
-        left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-        Seq("k"), "t", "t", Seq("v"), toleranceMicros = Some(5L))
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-    assert(tol == tolKeyed)
+    val (tol, tolKeyed, tolBrute) = keylessThreeWays(left, right, "backward",
+      toleranceUs = Some(5L))
+    assert(tol == tolKeyed && tol == tolBrute)
 
-    val strict = AsofJoin.globalBackward(left, right, "t", "t", Seq("v"),
-      allowExactMatches = false)
-    val strictKeyed = AsofJoin.backward(
-        left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-        Seq("k"), "t", "t", Seq("v"), allowExactMatches = false)
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-    assert(strict.select($"tag", $"v").as[(String, Option[Double])]
-      .collect().toMap == strictKeyed)
+    val (strict, strictKeyed, strictBrute) = keylessThreeWays(left, right,
+      "backward", allowExactMatches = false)
+    assert(strict == strictKeyed && strict == strictBrute)
   }
 
   test("globalForward matches the keyed forward on a constant key") {
-    import spark.implicits._
     val left = (1L to 400L).map(i => (i * 11, s"L$i"))
-      .toDF("tsm", "tag")
-      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
     val right = (1L to 80L).map(i => (i * 53 + 1, i.toDouble))
-      .toDF("tsm", "v")
-      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
+    assert(right.map(_._1).distinct.size == right.size)
 
-    val global = AsofJoin.globalForward(left, right, "t", "t", Seq("v"),
-      toleranceMicros = Some(30L))
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-    val keyed = AsofJoin.forward(
-        left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-        Seq("k"), "t", "t", Seq("v"), toleranceMicros = Some(30L))
-      .select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-    assert(global.size == 400 && global == keyed)
+    val (global, keyed, brute) = keylessThreeWays(left, right, "forward",
+      toleranceUs = Some(30L))
+    assert(global.size == 400 && global == keyed && global == brute)
   }
 
   test("globalNearest matches the keyed nearest on a constant key") {
-    import spark.implicits._
     // primes keep left/right timestamps interleaved and distinct; one
-    // engineered exact-ts collision (160) exercises tie handling
-    val baseLeft = (1L to 400L).map(i => (i * 11, s"L$i"))
-    val left = (baseLeft :+ ((160L, "Lx")))        // exact-ts collision
-      .toDF("tsm", "tag")
-      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
-    val right = ((1L to 80L).map(i => (i * 53 + 1, i.toDouble)) :+ ((160L, 999.0)))
-      .toDF("tsm", "v")
-      .withColumn("t", timestamp_micros($"tsm")).drop("tsm")
+    // engineered exact-ts collision (160) exercises tie handling. The
+    // right side's 160 is its ONE repeated ts (i=3 and 999.0): the
+    // pandas tie order makes 999.0 the backward match at 160 and 3.0
+    // the forward one
+    val left = (1L to 400L).map(i => (i * 11, s"L$i")) :+ ((160L, "Lx"))
+    val right = (1L to 80L).map(i => (i * 53 + 1, i.toDouble)) :+ ((160L, 999.0))
+    assert(right.map(_._1).diff(right.map(_._1).distinct) == Seq(160L))
 
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.select($"tag", $"v").as[(String, Option[Double])].collect().toMap
-
-    val global = asMap(AsofJoin.globalNearest(left, right, "t", "t", Seq("v")))
-    val keyed = asMap(AsofJoin.nearest(
-      left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-      Seq("k"), "t", "t", Seq("v")))
-    assert(global.size == 401 && global == keyed)
+    val (global, keyed, brute) = keylessThreeWays(left, right, "nearest")
+    assert(global.size == 401 && global == keyed && global == brute)
     assert(global("Lx").contains(999.0)) // exact match, distance 0
 
-    // strict mode: the exact-ts candidate must be skipped BOTH ways —
-    // this exercises the (nxt, nxtStrict) forward pair
-    val strict = asMap(AsofJoin.globalNearest(left, right, "t", "t", Seq("v"),
-      allowExactMatches = false))
-    val strictKeyed = asMap(AsofJoin.nearest(
-      left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-      Seq("k"), "t", "t", Seq("v"), allowExactMatches = false))
-    assert(strict == strictKeyed)
+    // strict mode: the exact-ts candidate must be skipped BOTH ways
+    val (strict, strictKeyed, strictBrute) = keylessThreeWays(left, right,
+      "nearest", allowExactMatches = false)
+    assert(strict == strictKeyed && strict == strictBrute)
     assert(!strict("Lx").contains(999.0))
 
-    val tol = asMap(AsofJoin.globalNearest(left, right, "t", "t", Seq("v"),
-      toleranceMicros = Some(7L)))
-    val tolKeyed = asMap(AsofJoin.nearest(
-      left.withColumn("k", lit(1)), right.withColumn("k", lit(1)),
-      Seq("k"), "t", "t", Seq("v"), toleranceMicros = Some(7L)))
-    assert(tol == tolKeyed)
+    val (tol, tolKeyed, tolBrute) = keylessThreeWays(left, right, "nearest",
+      toleranceUs = Some(7L))
+    assert(tol == tolKeyed && tol == tolBrute)
   }
 }

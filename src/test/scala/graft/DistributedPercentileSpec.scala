@@ -71,11 +71,10 @@ class DistributedPercentileSpec extends SparkSpec {
     }
   }
 
-  test("stacked multi-column form == per-column exactGrouped join") {
-    // the round-15 scan-sharing variant must be row-identical to
-    // running one exactGrouped pipeline per column and joining —
-    // including a group where one column is all-null (dropped by the
-    // inner join in both forms) and heavy ties
+  test("stacked multi-column form == Spark's percentile per column") {
+    // the scan-sharing form must be row-identical to Spark's exact
+    // `percentile` per column — including a group where one column is
+    // all-null (dropped by the per-column inner join) and heavy ties
     import spark.implicits._
     val df = Seq(
       ("a", Some(1.0), Some(10.0)), ("a", Some(2.0), Some(10.0)),
@@ -83,15 +82,19 @@ class DistributedPercentileSpec extends SparkSpec {
       ("b", Some(5.0), None), ("b", Some(5.0), None),
       ("b", Some(7.0), None), ("c", None, Some(1.0))).toDF("g", "x", "y")
     val ps1 = Seq(0.5, 0.25, 0.75); val ps2 = Seq(0.9)
-    val sep = DistributedPercentile.exactGrouped(
-        df.select($"g", $"x"), Seq("g"), "x", ps1, Seq("m", "q25", "q75"))
-      .join(DistributedPercentile.exactGrouped(
-        df.select($"g", $"y"), Seq("g"), "y", ps2, Seq("q90")), Seq("g"))
+    // reference: groups where both columns are non-empty, one row each
+    val want = df.groupBy($"g").agg(
+        expr(s"percentile(x, array(${ps1.mkString(",")}))").as("px"),
+        expr(s"percentile(y, array(${ps2.mkString(",")}))").as("py"))
+      .filter($"px".isNotNull && $"py".isNotNull)
+      .select($"g", $"px"(0).as("m"), $"px"(1).as("q25"), $"px"(2).as("q75"),
+        $"py"(0).as("q90"))
     val stacked = DistributedPercentile.exactGroupedStacked(
       df.selectExpr("g", "stack(2, 'x', x, 'y', y) as (cn, v)"),
       Seq("g"), "cn", "v",
       Seq(("x", ps1, Seq("m", "q25", "q75")), ("y", ps2, Seq("q90"))))
-    assert(sep.exceptAll(stacked).isEmpty && stacked.exceptAll(sep).isEmpty,
-      s"stacked=${stacked.collect().toSeq} separate=${sep.collect().toSeq}")
+    assert(want.select($"g").as[String].collect().toSeq == Seq("a"))
+    assert(want.exceptAll(stacked).isEmpty && stacked.exceptAll(want).isEmpty,
+      s"stacked=${stacked.collect().toSeq} percentile=${want.collect().toSeq}")
   }
 }

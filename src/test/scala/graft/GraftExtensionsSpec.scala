@@ -63,7 +63,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val installed = s.sessionState.planner.strategies
         .exists(_.getClass.getName.contains("AsofStrategy"))
       assert(installed, "AsofStrategy missing from planner strategies")
-      val df = graft.plans.AsofJoinNative.backward(s, left, right,
+      val df = graft.plans.AsofJoinNative.join(s, left, right,
         by = Seq("k"), leftTs = "ts", rightTs = "rts", valueCols = Seq("v"))
       val got = df.orderBy("ts").collect().map(_.getDouble(2)).toSeq
       assert(got == Seq(1.5, 2.5))

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    and oracle-checked directly (sel_multiindex_levels,
   *    set_concat_keys, set_update, agg_value_counts_series,
   *    rs_get_dummies_opts, win_ewm_* via Ewm, join_asof_* via
-  *    AsofJoin — the same operators PFrame calls);
+  *    AsofJoinNative.join — the same operators PFrame calls);
   *  - scalar lookups (.at/.iat/.count) and guards (transposeSmall,
   *    dot, between, fillna, astype, pipe, setIndex family) are
   *    pinned by PFrameSpec unit tests;

@@ -41,6 +41,29 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("keyless PFrame.mergeAsof plans the native walk in every direction") {
+    // by = Nil must take the range-bucketed keyless path: never an RDD
+    // walk outside the plan, never a window on one partition
+    import spark.implicits._
+    import org.apache.spark.sql.functions.max
+    val ev = Tables(spark, sf(), "events")
+    val clicks = graft.api.PFrame(ev.filter($"event_type" === "click")
+      .select($"event_id", $"ts"))
+    val purchases = graft.api.PFrame(ev.filter($"event_type" === "purchase")
+      .groupBy($"ts").agg(max($"value").as("purch_val")))
+    val faults = Seq("backward", "forward", "nearest").flatMap { dir =>
+      val p = clicks.mergeAsof(purchases, by = Nil, on = "ts",
+        valueCols = Seq("purch_val"), direction = dir)
+        .df.queryExecution.executedPlan.toString
+      Seq(
+        Option.when(!p.contains("AsofJoin"))(s"$dir: no native walk"),
+        Option.when(p.contains("Window"))(s"$dir: plans a window"),
+        Option.when(p.contains("SinglePartition"))(s"$dir: plans one partition")
+      ).flatten
+    }
+    assert(faults.isEmpty, faults.mkString("; "))
+  }
+
   test("star join broadcasts the dimension tables") {
     val p = executed("join_star_broadcast")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
